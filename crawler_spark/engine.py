@@ -46,6 +46,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from . import politeness
 from .extract import count_extracted, extract_candidates
@@ -374,6 +375,9 @@ def read_log_table(spark, ckpt: str, name: str, up_to_epoch: int) -> DataFrame:
     if not tombs:
         return spark.read.schema(schema).parquet(*dirs)
     key = _DELETE_KEYS[name]
+    # tombstones hold the key column only; an explicit schema spares
+    # Spark a schema-inference job per delete dir
+    key_schema = StructType([schema[key]])
     parts = None
     for d in dirs:
         p = spark.read.schema(schema).parquet(d).withColumn(
@@ -382,7 +386,7 @@ def read_log_table(spark, ckpt: str, name: str, up_to_epoch: int) -> DataFrame:
         parts = p if parts is None else parts.unionByName(p)
     tomb = None
     for d in tombs:
-        t = spark.read.parquet(d).select(
+        t = spark.read.schema(key_schema).parquet(d).select(
             F.col(key).alias("_del_key"), F.lit(_part_epoch(d)).alias("_del_epoch")
         )
         tomb = t if tomb is None else tomb.unionByName(t)

@@ -8,16 +8,19 @@ in this container): header ``SGI1 | fmt u8 | w u16le | h u16le`` +
 grayscale payload. ``png`` (fmt 0) is lossless; ``jpeg`` (fmt 1)
 quantizes to even pixel values → decoded-pixel PSNR ≈ 51 dB, satisfying
 the ≥40 dB lossy invariant. Swapping in a real codec (PIL / turbojpeg /
-ffmpeg for frame sampling) only changes the two ``_codec_*`` functions —
-every Spark-facing signature stays put.
+ffmpeg for frame sampling) only changes ``sgi_encode`` and
+``sgi_try_decode`` — every Spark-facing signature stays put.
 """
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import math
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 HEADER = b"SGI1"
@@ -39,27 +42,13 @@ def sgi_encode(pixels: np.ndarray, fmt: str) -> bytes:
     )
 
 
-def sgi_decode(blob: bytes) -> tuple:
-    """→ ((h, w) uint8 array, fmt str). Raises on bad magic."""
-    if blob[:4] != HEADER:
-        raise NotImplementedError(
-            "real image codecs unavailable in this container; only the "
-            "SGI1 stand-in codec is decodable (see module docstring)"
-        )
-    fmt = _FMTS[blob[4]]
-    w = int.from_bytes(blob[5:7], "little")
-    h = int.from_bytes(blob[7:9], "little")
-    pix = np.frombuffer(blob[9 : 9 + w * h], dtype=np.uint8).reshape(h, w)
-    return pix, fmt
-
-
 def sgi_try_decode(blob: bytes):
     """Total-function decode for quarantine paths: → (pixels, fmt, None)
     on success, (None, None, reason) on any malformed input —
     ``bad_magic`` (foreign/garbage header, unknown format code, or too
     short to carry one) or ``truncated`` (valid header, payload shorter
-    than w*h). At the 100 TB design point some fraction of fetched blobs
-    IS garbage; a scan stage must classify those rows, never throw."""
+    than w*h). The module's one header parser: at the 100 TB design
+    point some fetched blobs ARE garbage, and a scan must classify them."""
     if len(blob) < 9 or blob[:4] != HEADER or blob[4] not in _FMTS:
         return None, None, "bad_magic"
     fmt = _FMTS[blob[4]]
@@ -71,12 +60,78 @@ def sgi_try_decode(blob: bytes):
     return pix, fmt, None
 
 
+def sgi_decode(blob: bytes) -> tuple:
+    """→ ((h, w) uint8 array, fmt str). Raises NotImplementedError on a
+    foreign header, ValueError on a truncated payload."""
+    pix, fmt, err = sgi_try_decode(blob)
+    if err == "bad_magic":
+        raise NotImplementedError(
+            "real image codecs unavailable in this container; only the "
+            "SGI1 stand-in codec is decodable (see module docstring)"
+        )
+    if err is not None:
+        raise ValueError(f"{err} SGI1 blob ({len(blob)} bytes)")
+    return pix, fmt
+
+
 def psnr(a: np.ndarray, b: np.ndarray) -> float:
     mse = np.mean((a.astype(np.float64) - b.astype(np.float64)) ** 2)
     return float("inf") if mse == 0 else 10.0 * np.log10(255.0**2 / mse)
 
 
-_STATS_SCHEMA = T.StructType(
+# bit k of a phash is cell k of the 8×8 grid, row-major
+_BIT_WEIGHTS = np.uint64(1) << np.arange(64, dtype=np.uint64)
+
+
+@functools.lru_cache(maxsize=1024)
+def _grid(h: int, w: int) -> tuple:
+    """Cell starts and areas of the 8×8 grid: row ``y`` → ``y*8 // h``,
+    column ``x`` → ``x*8 // w``, so cell ``i`` starts at ``ceil(i*h/8)``."""
+    ye = (np.arange(9) * h + 7) // 8
+    xe = (np.arange(9) * w + 7) // 8
+    return ye[:-1], xe[:-1], np.outer(np.diff(ye), np.diff(xe))
+
+
+def _features(raw: bytes, on_error: str) -> tuple:
+    """The one per-image kernel → (w, h, fmt, n, s, sq, cells, err): exact
+    integer pixel count, sum, sum of squares and (8, 8) ``_grid`` cell
+    sums. A malformed blob raises, or under ``on_error="quarantine"``
+    gives None features and its ``err`` reason."""
+    if on_error == "raise":
+        (pix, fmt), err = sgi_decode(raw), None
+    else:
+        pix, fmt, err = sgi_try_decode(raw)
+    if err is None and min(pix.shape) < 8:
+        if on_error == "raise":
+            h, w = pix.shape
+            raise ValueError(f"bad_dims: {w}x{h} image, 8x8 grid needs dims >= 8")
+        err = "bad_dims"
+    if err is not None:
+        return (None,) * 7 + (err,)
+    h, w = pix.shape
+    ys, xs, _ = _grid(h, w)
+    p = pix.astype(np.int64)
+    cells = np.add.reduceat(np.add.reduceat(p, ys, axis=0), xs, axis=1)
+    flat = p.ravel()
+    return w, h, fmt, p.size, int(cells.sum()), int(flat @ flat), cells, None
+
+
+def _profile_row(raw: bytes, on_error: str) -> tuple:
+    """One image's ``_PROFILE_SCHEMA`` fields after ``image_id``. Sums
+    are exact integers under 2^53, so ``s/n``, ``sqrt((n*sq - s*s)/(n*n))``
+    and the phash's cell-mean > image-mean test are single correctly
+    rounded IEEE ops: an oracle restating them matches bit for bit."""
+    w, h, fmt, n, s, sq, cells, err = _features(raw, on_error)
+    key = hashlib.md5(raw).hexdigest()
+    if err is not None:
+        return None, None, None, None, None, None, key, err
+    bits = (cells / _grid(h, w)[2] > s / n).ravel()
+    phash = int(_BIT_WEIGHTS[bits].sum(dtype=np.uint64).astype(np.int64))
+    std = math.sqrt((n * sq - s * s) / (n * n))
+    return w, h, fmt, s / n, std, phash, key, None
+
+
+_PROFILE_SCHEMA = T.StructType(
     [
         T.StructField("image_id", T.StringType()),
         T.StructField("dec_w", T.IntegerType()),
@@ -84,39 +139,51 @@ _STATS_SCHEMA = T.StructType(
         T.StructField("dec_fmt", T.StringType()),
         T.StructField("mean_px", T.DoubleType()),
         T.StructField("std_px", T.DoubleType()),
+        T.StructField("phash2", T.LongType()),
+        T.StructField("byte_key", T.StringType()),
+        T.StructField("err", T.StringType()),
     ]
 )
 
 
-def decode_stats(df: DataFrame) -> DataFrame:
-    """Decode + per-image pixel stats via ``mapInPandas`` (one Arrow batch
-    in, one out; pure per-partition work, embarrassingly parallel).
+def image_profile(df: DataFrame, on_error: str = "raise") -> DataFrame:
+    """ONE decode pass → everything an image training-data pipeline
+    gates on: dims/format, exact-integer mean/std, the 64-bit perceptual
+    hash (8×8 cell means thresholded at the image mean), and the
+    exact-dup key (md5 of the raw bytes — hex matches ``F.md5``). At the
+    100 TB design point the decode is the dominant cost, so every later
+    stage works on this slim row, never the bytes; ``decode_stats`` and
+    ``phash_udf_frame`` are column selections of it.
 
-    mean/std are computed from EXACT integer pixel sums (sum and
-    sum-of-squares fit well under 2^53, so ``s/n`` and
-    ``sqrt((n*sq - s*s)/(n*n))`` are single correctly-rounded IEEE ops) —
-    bit-identical to any engine restating the same formula, which is what
-    lets the driver's DuckDB oracle hash-match this query."""
+    ``on_error="quarantine"`` classifies malformed blobs instead of
+    failing the task (one corrupt row in a petabyte scan must become a
+    quarantined row, not a dead job): such rows carry err='bad_magic'
+    (foreign header), 'truncated' (payload shorter than w*h) or
+    'bad_dims' (w or h below 8, so an 8×8 cell would be empty), NULL
+    stats/dims/phash, and still their byte_key (exact dedup of garbage
+    is still dedup). The default ``raise`` fails the task instead."""
+    if on_error not in ("raise", "quarantine"):
+        raise ValueError(f"on_error must be raise|quarantine, got {on_error!r}")
+    names = _PROFILE_SCHEMA.fieldNames()
 
     def run(batches):
-        import math
-
         for pdf in batches:
-            out = {k: [] for k in ("image_id", "dec_w", "dec_h", "dec_fmt", "mean_px", "std_px")}
-            for iid, blob in zip(pdf["image_id"], pdf["bytes"]):
-                pix, fmt = sgi_decode(bytes(blob))
-                n = pix.size
-                s = int(pix.sum(dtype=np.int64))
-                sq = int((pix.astype(np.int64) ** 2).sum(dtype=np.int64))
-                out["image_id"].append(iid)
-                out["dec_h"].append(pix.shape[0])
-                out["dec_w"].append(pix.shape[1])
-                out["dec_fmt"].append(fmt)
-                out["mean_px"].append(s / n)
-                out["std_px"].append(math.sqrt((n * sq - s * s) / (n * n)))
-            yield pd.DataFrame(out)
+            rows = [
+                (iid, *_profile_row(bytes(blob), on_error))
+                for iid, blob in zip(pdf["image_id"], pdf["bytes"])
+            ]
+            # object columns: a NULL must not turn phash2 into float64
+            yield pd.DataFrame(rows, columns=names, dtype=object)
 
-    return df.select("image_id", "bytes").mapInPandas(run, _STATS_SCHEMA)
+    return df.select("image_id", "bytes").mapInPandas(run, _PROFILE_SCHEMA)
+
+
+def decode_stats(df: DataFrame) -> DataFrame:
+    """Decode + per-image pixel stats (dims, format, exact-integer
+    mean/std): a column selection of ``image_profile``."""
+    return image_profile(df).select(
+        "image_id", "dec_w", "dec_h", "dec_fmt", "mean_px", "std_px"
+    )
 
 
 _ENCODE_SCHEMA = T.StructType(
@@ -183,112 +250,10 @@ def resize_images(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
 
 def phash_udf_frame(df: DataFrame) -> DataFrame:
     """Recompute the 64-bit perceptual hash from decoded pixels (8x8
-    block-mean thresholded at the image mean — must reproduce the
-    corpus-side phash column bit-for-bit; tested)."""
-    schema = T.StructType(
-        [T.StructField("image_id", T.StringType()), T.StructField("phash2", T.LongType())]
-    )
-
-    def run(batches):
-        for pdf in batches:
-            ids, hashes = [], []
-            for iid, blob in zip(pdf["image_id"], pdf["bytes"]):
-                pix, _ = sgi_decode(bytes(blob))
-                h, w = pix.shape
-                blocks = pix.reshape(8, h // 8, 8, w // 8).mean(axis=(1, 3))
-                bits = (blocks > pix.mean()).reshape(64)
-                val = np.uint64(0)
-                weights = np.uint64(1) << np.arange(64, dtype=np.uint64)
-                val = (bits.astype(np.uint64) * weights).sum(dtype=np.uint64)
-                hashes.append(int(val.astype(np.int64)))
-                ids.append(iid)
-            yield pd.DataFrame({"image_id": ids, "phash2": hashes})
-
-    return df.select("image_id", "bytes").mapInPandas(run, schema)
-
-
-_PROFILE_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType()),
-        T.StructField("dec_w", T.IntegerType()),
-        T.StructField("dec_h", T.IntegerType()),
-        T.StructField("dec_fmt", T.StringType()),
-        T.StructField("mean_px", T.DoubleType()),
-        T.StructField("std_px", T.DoubleType()),
-        T.StructField("phash2", T.LongType()),
-        T.StructField("byte_key", T.StringType()),
-        T.StructField("err", T.StringType()),
-    ]
-)
-
-
-def image_profile(df: DataFrame, on_error: str = "raise") -> DataFrame:
-    """ONE decode pass → everything an image training-data pipeline
-    gates on: dims/format, exact-integer mean/std (decode_stats's
-    formulas), the 64-bit perceptual hash (phash_udf_frame's formula,
-    bit-for-bit), and the exact-dup key (md5 of the raw bytes — hex
-    matches ``F.md5``). At the 100 TB design point the decode is the
-    dominant cost, so quality gating, exact dedup, and near-dup hashing
-    must share a single scan: every later pipeline stage works on this
-    slim profile row, never the bytes.
-
-    ``on_error="quarantine"`` classifies malformed blobs instead of
-    failing the task (the 100 TB posture — one corrupt row in a
-    petabyte scan must become a quarantined row, not a dead job): such
-    rows carry err='bad_magic'|'truncated', NULL stats/dims/phash, and
-    still get their byte_key (the bytes exist; exact dedup of garbage
-    is still dedup). The default ``raise`` keeps the strict contract
-    for corpora that guarantee well-formed payloads."""
-    if on_error not in ("raise", "quarantine"):
-        raise ValueError(f"on_error must be raise|quarantine, got {on_error!r}")
-
-    def run(batches):
-        import hashlib
-
-        for pdf in batches:
-            cols = {k: [] for k in (
-                "image_id", "dec_w", "dec_h", "dec_fmt",
-                "mean_px", "std_px", "phash2", "byte_key", "err",
-            )}
-            for iid, blob in zip(pdf["image_id"], pdf["bytes"]):
-                raw = bytes(blob)
-                if on_error == "quarantine":
-                    pix, fmt, err = sgi_try_decode(raw)
-                    if err is not None:
-                        cols["image_id"].append(iid)
-                        cols["dec_w"].append(None)
-                        cols["dec_h"].append(None)
-                        cols["dec_fmt"].append(None)
-                        cols["mean_px"].append(None)
-                        cols["std_px"].append(None)
-                        cols["phash2"].append(None)
-                        cols["byte_key"].append(hashlib.md5(raw).hexdigest())
-                        cols["err"].append(err)
-                        continue
-                else:
-                    pix, fmt = sgi_decode(raw)
-                h, w = pix.shape
-                n = pix.size
-                s = int(pix.sum(dtype=np.int64))
-                sq = int((pix.astype(np.int64) ** 2).sum(dtype=np.int64))
-                blocks = pix.reshape(8, h // 8, 8, w // 8).mean(axis=(1, 3))
-                bits = (blocks > pix.mean()).reshape(64)
-                weights = np.uint64(1) << np.arange(64, dtype=np.uint64)
-                val = (bits.astype(np.uint64) * weights).sum(dtype=np.uint64)
-                cols["image_id"].append(iid)
-                cols["dec_w"].append(w)
-                cols["dec_h"].append(h)
-                cols["dec_fmt"].append(fmt)
-                cols["mean_px"].append(s / n)
-                cols["std_px"].append(
-                    float(np.sqrt((n * sq - s * s) / (n * n)))
-                )
-                cols["phash2"].append(int(val.astype(np.int64)))
-                cols["byte_key"].append(hashlib.md5(raw).hexdigest())
-                cols["err"].append(None)
-            yield pd.DataFrame(cols)
-
-    return df.select("image_id", "bytes").mapInPandas(run, _PROFILE_SCHEMA)
+    cell means thresholded at the image mean — must reproduce the
+    corpus-side phash column bit-for-bit; tested): a column selection
+    of ``image_profile``."""
+    return image_profile(df).select("image_id", "phash2")
 
 
 _EMBED_SCHEMA = T.StructType(
@@ -301,32 +266,25 @@ _EMBED_SCHEMA = T.StructType(
 
 def block_embedding(df: DataFrame) -> DataFrame:
     """64-dim image embedding from decoded pixels: the EXACT integer sum
-    of each cell of an 8×8 block grid, row-major (same grid the
-    perceptual hash uses). Cosine between two of these is invariant to
-    the per-image block area (all 64 blocks of one image have equal
-    area), so the vector doubles as a resolution-independent content
-    embedding. Exact int64 components are what let a cross-modal cosine
-    over this embedding hash-match a DuckDB oracle bit-for-bit: dot and
-    norms are integer sums, and only the final divide/sqrt touch floats.
-    One ``mapInPandas`` decode pass, zero shuffle — the 100 TB shape is
-    scan → slim (image_id, 64×int64) rows, bytes never leave the scan
-    stage."""
+    of each cell of the 8×8 grid the perceptual hash uses (row ``y`` →
+    ``y*8 // h``, column ``x`` → ``x*8 // w``), row-major. Dims below 8
+    fail the task with a ValueError naming them (``bad_dims``). Cells
+    have equal area only when both dims are multiples of 8; otherwise
+    areas differ by up to one row and one column, so cosine between two
+    embeddings is then only nearly resolution-independent. Exact int64
+    components are what let a cross-modal cosine over this embedding
+    hash-match a DuckDB oracle bit-for-bit: dot and norms are integer
+    sums, and only the final divide/sqrt touch floats. One
+    ``mapInPandas`` decode pass, zero shuffle — the 100 TB shape is scan
+    → slim (image_id, 64×int64) rows, bytes never leave the scan stage."""
 
     def run(batches):
         for pdf in batches:
-            ids, vecs = [], []
-            for iid, blob in zip(pdf["image_id"], pdf["bytes"]):
-                pix, _ = sgi_decode(bytes(blob))
-                h, w = pix.shape
-                sums = (
-                    pix.astype(np.int64)
-                    .reshape(8, h // 8, 8, w // 8)
-                    .sum(axis=(1, 3))
-                    .reshape(64)
-                )
-                ids.append(iid)
-                vecs.append([int(v) for v in sums])
-            yield pd.DataFrame({"image_id": ids, "img_vec": vecs})
+            vecs = [
+                _features(bytes(blob), "raise")[6].ravel().tolist()
+                for blob in pdf["bytes"]
+            ]
+            yield pd.DataFrame({"image_id": pdf["image_id"], "img_vec": vecs})
 
     return df.select("image_id", "bytes").mapInPandas(run, _EMBED_SCHEMA)
 
@@ -355,27 +313,18 @@ def psnr_frame(df: DataFrame) -> DataFrame:
     the same formula matches to float precision. Lossless rows (err 0)
     report psnr_db NULL, psnr_ok true."""
 
-    def run(batches):
-        import math
+    def audit(iid, blob, pixels):
+        dec, fmt = sgi_decode(bytes(blob))
+        src = np.asarray(pixels, dtype=np.int64).reshape(dec.shape)
+        err = int(((src - dec.astype(np.int64)) ** 2).sum(dtype=np.int64))
+        n = dec.size
+        db = None if err == 0 else 10.0 * math.log10(65025.0 * n / err)
+        return iid, fmt, n, err, err / n, db, err == 0 or db >= 40.0
 
+    def run(batches):
         for pdf in batches:
-            cols = {k: [] for k in (
-                "image_id", "fmt", "n_px", "err_sq", "mse", "psnr_db", "psnr_ok",
-            )}
-            for iid, blob, pixels in zip(pdf["image_id"], pdf["bytes"], pdf["pixels"]):
-                dec, fmt = sgi_decode(bytes(blob))
-                src = np.asarray(pixels, dtype=np.int64).reshape(dec.shape)
-                err = int(((src - dec.astype(np.int64)) ** 2).sum(dtype=np.int64))
-                n = dec.size
-                cols["image_id"].append(iid)
-                cols["fmt"].append(fmt)
-                cols["n_px"].append(n)
-                cols["err_sq"].append(err)
-                cols["mse"].append(err / n)
-                db = None if err == 0 else 10.0 * math.log10(65025.0 * n / err)
-                cols["psnr_db"].append(db)
-                cols["psnr_ok"].append(err == 0 or db >= 40.0)
-            yield pd.DataFrame(cols)
+            rows = map(audit, pdf["image_id"], pdf["bytes"], pdf["pixels"])
+            yield pd.DataFrame(list(rows), columns=_PSNR_SCHEMA.fieldNames())
 
     return df.select("image_id", "bytes", "pixels").mapInPandas(run, _PSNR_SCHEMA)
 

@@ -82,7 +82,12 @@ def hash_split(
     Pure per-row column math, no shuffle."""
     if not 0 <= val_pct <= 100:
         raise ValueError("val_pct must be in [0, 100]")
-    key = F.concat_ws("\x1f", *[F.col(c).cast("string") for c in key_cols])
+    # concat_ws skips NULLs, so ('a', NULL, 'b') would key as ('a', 'b'):
+    # a NULL becomes the sentinel "\x00" (non-NULL keys are unchanged)
+    key = F.concat_ws(
+        "\x1f",
+        *[F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in key_cols],
+    )
     bucket = F.pmod(md5_hash61(key), F.lit(100))
     return df.withColumn(
         split_col,

@@ -15,6 +15,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _worker_pythonpath() -> str:
+    """The package's parent directory, ahead of any inherited PYTHONPATH."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return os.pathsep.join(p for p in (root, os.environ.get("PYTHONPATH")) if p)
+
+
 def get_spark(
     app: str = "crawler-spark",
     master: str | None = None,
@@ -35,6 +41,12 @@ def get_spark(
         b = b.master(master)
     elif "PYSPARK_GATEWAY_PORT" not in os.environ:
         b = b.master(f"local[{cpus}]")
+    # Python workers import this package to run mapInPandas/applyInPandas
+    # bodies; a session started outside the repository root would leave
+    # them without it. The same rule as the master: a submitted JVM's
+    # executors get their paths from spark-submit (--py-files).
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        b = b.config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
     b = (
         b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")

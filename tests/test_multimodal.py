@@ -228,12 +228,26 @@ def test_multimodal_neardup_joint_semantics(spark):
     assert (img_pairs - joint) and (txt_pairs - joint)
 
 
+def _brute_grid(pix):
+    """Per-pixel 8×8 cell sums and areas: pixel (y, x) → cell
+    (y*8 // h, x*8 // w), the oracle's any-dims grid."""
+    h, w = pix.shape
+    sums, area = [0] * 64, [0] * 64
+    for y in range(h):
+        for x in range(w):
+            k = (y * 8 // h) * 8 + x * 8 // w
+            sums[k] += int(pix[y, x])
+            area[k] += 1
+    return sums, area
+
+
 def test_block_embedding_exact_sums(spark):
-    """The 64-dim image embedding is the EXACT int64 block-sum grid of
-    the decoded pixels — verified against numpy on the raw arrays."""
+    """The 64-dim image embedding is the EXACT int64 cell-sum grid of
+    the decoded pixels — verified against a per-pixel loop on the raw
+    arrays, including a 12×20 image whose dims are not multiples of 8."""
     rng = np.random.default_rng(11)
     rows = []
-    for i, (w, h) in enumerate([(16, 8), (8, 24), (32, 32)]):
+    for i, (w, h) in enumerate([(16, 8), (8, 24), (32, 32), (12, 20)]):
         pix = rng.integers(0, 256, size=(h, w), dtype=np.uint8)
         rows.append((f"img-{i}", mm.sgi_encode(pix, "png"), pix))
     df = spark.createDataFrame(
@@ -242,14 +256,7 @@ def test_block_embedding_exact_sums(spark):
     )
     got = {r.image_id: r.img_vec for r in mm.block_embedding(df).collect()}
     for iid, _, pix in rows:
-        h, w = pix.shape
-        want = (
-            pix.astype(np.int64)
-            .reshape(8, h // 8, 8, w // 8)
-            .sum(axis=(1, 3))
-            .reshape(64)
-        )
-        assert got[iid] == [int(v) for v in want]
+        assert got[iid] == _brute_grid(pix)[0]
 
 
 def test_caption_image_align_gate(spark):
@@ -282,26 +289,46 @@ def test_image_profile_quarantine(spark):
     """One corrupt blob in a binary scan must become a classified
     quarantine row, not a dead task: bad-magic and truncated-payload
     blobs (valid header, missing pixels — header sniffing passes it)
-    both classify in the same decode pass that profiles healthy rows;
-    the strict default still raises."""
+    and header-valid blobs too small for the 8×8 grid (4×16, 0×0) all
+    classify in the same decode pass that profiles healthy rows, odd
+    dims (12×20) included; the strict default still raises."""
     good = mm.sgi_encode(np.full((8, 8), 9, dtype=np.uint8), "png")
+    odd = np.random.default_rng(5).integers(0, 256, size=(20, 12), dtype=np.uint8)
+    thin = mm.sgi_encode(np.zeros((16, 4), dtype=np.uint8), "png")
+    empty_dims = mm.sgi_encode(np.zeros((0, 0), dtype=np.uint8), "png")
     rows = [
         ("ok", bytearray(good)),
+        ("odd", bytearray(mm.sgi_encode(odd, "png"))),
         ("garbage", bytearray(b"not an image at all")),
         ("truncated", bytearray(good[:12])),
         ("empty", bytearray(b"")),
+        ("thin", bytearray(thin)),
+        ("zero", bytearray(empty_dims)),
     ]
     df = spark.createDataFrame(rows, "image_id string, bytes binary")
     out = {r.image_id: r for r in mm.image_profile(df, on_error="quarantine").collect()}
     assert out["ok"].err is None and out["ok"].mean_px == 9.0
+    # odd dims profile on the any-dims grid, phash exact in all 64 bits
+    sums, area = _brute_grid(odd)
+    n, s = odd.size, int(odd.sum())
+    want_bits = sum(1 << k for k in range(64) if sums[k] / area[k] > s / n)
+    want_bits -= (1 << 64) if want_bits >> 63 else 0  # LongType wraps bit 63
+    assert out["odd"].err is None
+    assert (out["odd"].dec_w, out["odd"].dec_h, out["odd"].mean_px) == (12, 20, s / n)
+    assert out["odd"].phash2 == want_bits
     assert out["garbage"].err == "bad_magic"
     assert out["truncated"].err == "truncated"
     assert out["empty"].err == "bad_magic"
-    for bad in ("garbage", "truncated", "empty"):
+    assert out["thin"].err == "bad_dims" and out["zero"].err == "bad_dims"
+    for bad in ("garbage", "truncated", "empty", "thin", "zero"):
         assert out[bad].mean_px is None and out[bad].phash2 is None
         assert out[bad].byte_key is not None  # garbage still dedups exactly
     with pytest.raises(Exception):
         mm.image_profile(df).collect()  # default raise mode unchanged
+    for blob, dims in ((thin, "4x16"), (empty_dims, "0x0")):
+        one = spark.createDataFrame([("x", bytearray(blob))], "image_id string, bytes binary")
+        with pytest.raises(Exception, match=f"ValueError: bad_dims: {dims} "):
+            mm.image_profile(one, on_error="raise").collect()
     with pytest.raises(ValueError):
         mm.image_profile(df, on_error="ignore")
 

@@ -279,6 +279,16 @@ def test_hash_split_deterministic_and_bounded(spark):
     assert 120 <= n_val <= 280  # ~10% of 2000 with hash variance
     assert {r.split for r in hash_split(df, ["doc_id"], 0).collect()} == {"train"}
     assert {r.split for r in hash_split(df, ["doc_id"], 100).collect()} == {"val"}
+    # a NULL key column keeps its place: (x, NULL, x) and (x, x, NULL)
+    # are different keys, so at 50% they must not always split alike
+    def split_of(rows):
+        nul = spark.createDataFrame(rows, "i long, k1 string, k2 string, k3 string")
+        return {r.i: r.split for r in hash_split(nul, ["k1", "k2", "k3"], 50).collect()}
+
+    ids = [(i, f"d{i}") for i in range(200)]
+    assert split_of([(i, x, None, x) for i, x in ids]) != split_of(
+        [(i, x, x, None) for i, x in ids]
+    )
     import pytest as _pt
 
     with _pt.raises(ValueError):

@@ -146,6 +146,21 @@ def test_ttl_commits_are_delta_plus_tombstones(spark, web, tmp_path):
     deletes = [x for x in names if x.startswith("delete-")]
     assert all(0 < rows_in(x) < total for x in deletes)
 
+    # defining the log read is plan-only: no schema-inference job per
+    # tombstone dir (their schema is the key column's)
+    from crawler_spark.engine import _log_parts, read_log_table
+
+    last = eng.latest_snapshot()
+    assert len(_log_parts(ck, "url_seen", last)[2]) >= 2
+    sc = spark.sparkContext
+    sc.setJobGroup("read_log_table_jobs", "define the url_seen log read")
+    try:
+        live = read_log_table(spark, ck, "url_seen", last)
+        assert list(sc.statusTracker().getJobIdsForGroup("read_log_table_jobs")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert live.count() == total
+
     # a fresh engine resuming the checkpoint reads the identical state
     cont = CrawlEngine(
         spark, corpus, robots,

@@ -22,6 +22,14 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPARK_SUBMIT = shutil.which("spark-submit")
 
 
+def test_local_session_gives_python_workers_the_package(spark):
+    """A plain-python session puts the package's parent directory first
+    on its Python workers' path, so mapInPandas/applyInPandas bodies
+    import crawler_spark whatever directory the session started in."""
+    path = spark.sparkContext.getConf().get("spark.executorEnv.PYTHONPATH")
+    assert path is not None and path.split(os.pathsep)[0] == REPO
+
+
 @pytest.mark.skipif(SPARK_SUBMIT is None, reason="spark-submit not on PATH")
 def test_spark_submit_pyfiles_crawl(tmp_path):
     sys.path.insert(0, REPO)
