@@ -9,11 +9,13 @@ Two implementations, locked together by ``tests/test_canon.py``:
 * :func:`canonicalize_expr` — a pure Spark **Column expression** (regexp /
   string built-ins). Runs inside whole-stage codegen; zero Python on the
   hot path, which is what survives a 10^10-link epoch.
-* :func:`canonicalize` — plain Python, used by the sequential oracle.
+* :func:`canonicalize` — plain Python, used by the sequential oracle and
+  the reference the Column version is tested against.
 
-Both apply the identical step list, so crawl-order parity cannot drift on
-canonicalization. A row-at-a-time ``urllib`` round-trip is deliberately NOT
-used anywhere.
+Both give the same result for every (href, base) pair, so crawl-order
+parity cannot drift on canonicalization: Python runs the step list, the
+Column version folds resolution into one regexp rewrite. A row-at-a-time
+``urllib`` round-trip is deliberately NOT used anywhere.
 """
 
 from __future__ import annotations
@@ -22,53 +24,65 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 _UNESCAPES = [("&amp;", "&"), ("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'), ("&#39;", "'")]
-_SCHEME_RE = "^[a-zA-Z][a-zA-Z0-9+.-]*:"
-_ABS_RE = "^[a-zA-Z][a-zA-Z0-9+.-]*://"
+_SCHEME = "[a-zA-Z][a-zA-Z0-9+.-]*"
+_ABS_RE = f"^{_SCHEME}://"
 # scheme://authority, path — authority lowercased, default :80/:443 stripped
-_URL_PARTS_RE = "^([a-zA-Z][a-zA-Z0-9+.-]*)://([^/?#]*)([^#]*)$"
+_URL_PARTS_RE = f"^({_SCHEME})://([^/?#]*)([^#]*)$"
 
 NON_FETCHABLE_SCHEMES = ("javascript:", "mailto:", "tel:", "data:", "ftp:")
+
+# Resolution as ONE rewrite of "base \x01 href": the first alternative
+# matching the whole string wins (the oracle's if/elif chain), and Java
+# appends nothing for a group outside the winner, so "$1..$7" keeps its
+# parts — and "" for a part the base lacks, as the oracle's failed base
+# matches give. [^\x01]* stops at the first marker, so one inside the
+# href is plain text; the base directory stops at line terminators like
+# Java's `.` in the old `^(.*/)`; \z because Java's $ also matches
+# before a final line terminator.
+_NON_FETCHABLE = "|".join(s[:-1] for s in NON_FETCHABLE_SCHEMES)
+_RESOLVE_RE = "|".join(
+    [
+        # empty or non-fetchable href → "" (fails the parse below → NULL)
+        rf"^[^\x01]*\x01(?:(?i:{_NON_FETCHABLE}):[\s\S]*)?\z",
+        # absolute → href
+        rf"^[^\x01]*\x01({_SCHEME}://[\s\S]*)\z",
+        # scheme-relative → base scheme ":" href
+        rf"^({_SCHEME}:)?[^\x01]*\x01(//[\s\S]*)\z",
+        # root-relative → base origin + href
+        rf"^({_SCHEME}://[^/?#\x01]*)?[^\x01]*\x01(/[\s\S]*)\z",
+        # relative → base directory + href
+        rf"^([^\x01\n\r\x85\u2028\u2029]*/)?[^\x01]*\x01([\s\S]*)\z",
+    ]
+)
 
 
 def canonicalize_expr(href: Column, base_url: Column) -> Column:
     """JVM-side canonicalization; NULL for non-fetchable hrefs.
 
-    Column-expression mirror of :func:`canonicalize` — keep the two in
-    lockstep (tests assert equality on the fixture matrix).
+    Column-expression mirror of :func:`canonicalize` (tests assert
+    equality on the fixture matrix and on random hrefs). The unescaped,
+    fragment-free href meets the base in one string that one rewrite
+    resolves; the parse reads the result twice in one projection, which
+    codegen evaluates once. A NULL href gives NULL; *base_url* must be
+    non-NULL (the oracle raises on one) and free of the U+0001 marker —
+    callers pass page urls.
     """
     h = href
     for src, dst in _UNESCAPES:
         h = F.replace(h, F.lit(src), F.lit(dst))
     h = F.regexp_replace(h, "#.*$", "")  # strip fragment
-
-    lower_h = F.lower(h)
-    non_fetchable = F.lit(False)
-    for scheme in NON_FETCHABLE_SCHEMES:
-        non_fetchable = non_fetchable | lower_h.startswith(scheme)
-
-    origin = F.regexp_extract(base_url, "^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)", 1)
-    base_dir = F.regexp_extract(base_url, "^(.*/)", 1)
-    scheme_of_base = F.regexp_extract(base_url, "^([a-zA-Z][a-zA-Z0-9+.-]*):", 1)
-
-    absolute = (
-        F.when(h.rlike(_ABS_RE), h)
-        .when(h.startswith("//"), F.concat(scheme_of_base, F.lit(":"), h))
-        .when(h.startswith("/"), F.concat(origin, h))
-        .otherwise(F.concat(base_dir, h))
+    absolute = F.regexp_replace(
+        F.concat(base_url, F.lit("\x01"), h), _RESOLVE_RE, "$1$2$3$4$5$6$7"
     )
-
-    scheme = F.lower(F.regexp_extract(absolute, _URL_PARTS_RE, 1))
-    authority = F.lower(F.regexp_extract(absolute, _URL_PARTS_RE, 2))
-    authority = F.regexp_replace(authority, ":(80|443)$", "")
-    path = F.regexp_extract(absolute, _URL_PARTS_RE, 3)
-    path = F.when(path == "", F.lit("/")).otherwise(path)
-
-    rebuilt = F.concat(scheme, F.lit("://"), authority, path)
-    return (
-        F.when(non_fetchable | (h == "") | h.isNull(), F.lit(None))
-        .when(scheme == "", F.lit(None))  # unparseable after resolution
-        .otherwise(rebuilt)
+    # scheme://authority, NULL when the resolved url does not parse;
+    # try_element_at rather than nullif, which the optimizer splits into
+    # a second projection that would resolve the url again
+    origin = F.try_element_at(
+        F.regexp_extract_all(absolute, F.lit(f"^({_SCHEME}://[^/?#]*)[^#]*$"), F.lit(1)),
+        F.lit(1),
     )
+    path = F.regexp_replace(F.regexp_replace(absolute, f"^{_SCHEME}://[^/?#]*", ""), "^$", "/")
+    return F.concat(F.regexp_replace(F.lower(origin), ":(80|443)$", ""), path)
 
 
 def host_of_expr(url: Column) -> Column:

@@ -156,7 +156,7 @@ def cmd_crawl(args) -> int:
         epoch_ms=args.epoch_ms,
         max_pages=args.max_pages,
         leaf_limit=args.leaf_limit,
-        use_bloom=not args.no_bloom,
+        seen_filter="none" if args.no_bloom else "bloom",
         checkpoint_dir=args.checkpoint,
         exemplar_sampling=args.exemplar,
         exemplar_cosine_threshold=args.exemplar_threshold,

@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from . import politeness
-from .extract import count_extracted, extract_candidates
+from .extract import canonical_links, extract_candidates
 from .operators.sequence import with_global_seq
 from .schema import (
     CONTENT_SEEN_SCHEMA,
@@ -75,12 +75,11 @@ class EngineConfig:
     # leaf budget (reference --num-leaves, default 300, main.clj:25-28):
     # stop before an epoch once cumulative fetched leaf pages ≥ limit
     leaf_limit: int | None = None
-    use_bloom: bool = True
     # which approximate membership structure fronts the exact anti-join:
-    # "bloom" (OR-mergeable bitmaps, seen.py) or "cuckoo" (deletable
+    # "bloom" (OR-mergeable bitmaps, seen.py), "cuckoo" (deletable
     # fingerprint slots, cuckoo.py — the north_rule's bloom/cuckoo
-    # alternative). Both are traffic reducers only; membership stays
-    # exact. use_bloom=False disables the prefilter entirely.
+    # alternative) or "none" (no prefilter). The filters are traffic
+    # reducers only; membership stays exact.
     seen_filter: str = "bloom"
     cuckoo_n_buckets: int = 1 << 14  # 16k buckets × 4 slots = 128 KiB
     # TTL recrawl: pages last scheduled at epoch X expire at epoch X+T —
@@ -97,7 +96,7 @@ class EngineConfig:
     # k>1 commits every k epochs + always on run() exit. Between commits
     # state lineage is truncated with localCheckpoint instead of disk.
     commit_every: int = 1
-    # metrics detail: False skips the extra pre-same-host link scan and
+    # metrics detail: False skips the pre-same-host link count and
     # reports links_extracted = same-host candidate count instead
     # (parity tests need True; throughput runs use False)
     detailed_metrics: bool = True
@@ -196,21 +195,21 @@ class EngineConfig:
     track_paths: bool = True
 
     def __post_init__(self):
+        if self.seen_filter not in ("bloom", "cuckoo", "none"):
+            raise ValueError(
+                f"seen_filter={self.seen_filter!r}; expected 'bloom', 'cuckoo' or 'none'"
+            )
         # bloom bits can't be unset, so a TTL run with bloom segments
         # would rebuild the whole filter from the surviving seen set on
         # EVERY expiry epoch — O(total seen), O(10^10) at the design
         # point. Rejected at config time; cuckoo's fingerprint deletes
         # are O(expired) with untouched segments passed through.
-        if (
-            self.recrawl_ttl_epochs is not None
-            and self.use_bloom
-            and self.seen_filter == "bloom"
-        ):
+        if self.recrawl_ttl_epochs is not None and self.seen_filter == "bloom":
             raise ValueError(
                 "recrawl_ttl_epochs with seen_filter='bloom' would rebuild "
                 "the whole bloom filter every expiry epoch (O(total seen)); "
                 "use seen_filter='cuckoo' (O(expired) fingerprint deletes) "
-                "or use_bloom=False for TTL runs"
+                "or seen_filter='none' for TTL runs"
             )
         if self.paging_model and not self.track_paths:
             raise ValueError(
@@ -476,6 +475,18 @@ class CrawlEngine:
             ).groupBy("alias_url").agg(F.min("final_url").alias("final_url"))
             self._alias_map = amap
         self.robots = robots
+        # per-source paging model as a (path, __pg) table: each epoch's
+        # batch joins it by the parent's action path. A later entry for
+        # the same path replaces an earlier one.
+        entries = {
+            tuple(seq): (list(seq), (xp, list(only), list(avoid)))
+            for seq, xp, only, avoid in self.cfg.paging_model
+        }
+        self._paging = spark.createDataFrame(
+            list(entries.values()),
+            "path array<string>, "
+            "__pg struct<xpath:string,only:array<string>,avoid:array<string>>",
+        )
         # robots is per-HOST: tiny on most crawls, but at the 10^10-URL
         # design point (10^7-10^8 live hosts) it crosses the same
         # broadcast ceiling the epoch-batch joins guard against. One
@@ -683,7 +694,7 @@ class CrawlEngine:
         # read of cuckoo bytes (or a prefilter read of an empty no-filter
         # table) would silently produce wrong membership answers
         have = self._manifest.get("seen_filter", "bloom")
-        want = self._filter_kind()
+        want = self.cfg.seen_filter
         if have != want:
             raise ValueError(
                 f"snapshot was written with seen_filter={have!r}; engine is "
@@ -749,7 +760,7 @@ class CrawlEngine:
             "frontier": frontier,
             "url_seen": url_seen,
             "segments": self._build_segments(url_seen, None)
-            if cfg.use_bloom
+            if cfg.seen_filter != "none"
             else self.spark.createDataFrame([], "partition_id int, bits binary, n_items long"),
             "crawl_order": spark.createDataFrame([], CRAWL_ORDER_SCHEMA),
             "lineage": spark.createDataFrame([], LINEAGE_SCHEMA),
@@ -760,16 +771,13 @@ class CrawlEngine:
         }
         self._manifest = {
             "epoch": -1, "next_seq": n_seeds, "dequeue_seq": 0, "leaves_fetched": 0,
-            "pending": n_seeds, "seen_filter": self._filter_kind(),
+            "pending": n_seeds, "seen_filter": cfg.seen_filter,
             "format": CHECKPOINT_FORMAT,
         }
         # the seed rows are commit 0's url_seen delta; every other
         # append table starts empty
         self._uncommitted = {"url_seen": [url_seen]}
         self._uncommitted_deletes = {}
-
-    def _filter_kind(self) -> str:
-        return self.cfg.seen_filter if self.cfg.use_bloom else "none"
 
     def _build_segments(self, new_rows, existing):
         """Dispatch to the configured seen-prefilter family (bloom
@@ -782,7 +790,7 @@ class CrawlEngine:
         return build_segments(new_rows, existing, self.cfg.bloom_m_bits)
 
     def _anti_join_seen(self, candidates, broadcast_probe):
-        segments = self._state["segments"] if self.cfg.use_bloom else None
+        segments = self._state["segments"] if self.cfg.seen_filter != "none" else None
         if self.cfg.seen_filter == "cuckoo":
             from .cuckoo import cuckoo_anti_join_seen
 
@@ -903,7 +911,7 @@ class CrawlEngine:
                         p.join(self._bcast(expired, n_expired), "url", "left_anti")
                         for p in self._uncommitted[name]
                     ]
-            if self.cfg.use_bloom:
+            if self.cfg.seen_filter == "cuckoo":
                 # EngineConfig.__post_init__ rejects bloom+TTL, so the
                 # only prefilter reaching expiry is cuckoo — O(expired)
                 # fingerprint deletes, untouched segments pass through
@@ -960,17 +968,15 @@ class CrawlEngine:
                 self.robots.count() <= cfg.broadcast_max_rows
             )
         obs_flag = Observation()
+        flag_aggs = (
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.sum(F.col("__disallowed").cast("long")), F.lit(0)).alias("d"),
+        )
         flagged = (
             politeness.with_disallowed_flag(
                 frontier, self.robots, bcast=self._robots_bcast
             )
-            .observe(
-                obs_flag,
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(
-                    F.sum(F.col("__disallowed").cast("long")), F.lit(0)
-                ).alias("d"),
-            )
+            .observe(obs_flag, *flag_aggs)
             .persist()
         )
         allowed = flagged.filter(~F.col("__disallowed")).drop("__disallowed")
@@ -1068,14 +1074,14 @@ class CrawlEngine:
         # job each — per-epoch driver job count is the local throughput
         # ceiling (and the per-commit latency floor on a cluster)
         obs_fetch = Observation()
-        fetched = fetched.observe(
-            obs_fetch,
+        fetch_aggs = (
             F.count(F.lit(1)).alias("n"),
             F.coalesce(
                 F.sum((F.col("is_leaf") & ~F.col("__cache_hit")).cast("long")),
                 F.lit(0),
             ).alias("lv"),
         )
+        fetched = fetched.observe(obs_fetch, *fetch_aggs)
         fetched.persist()
         extract_input = fetched.filter(~F.col("__cache_hit")).drop(
             "__cache_hit", "requested_url"
@@ -1106,55 +1112,32 @@ class CrawlEngine:
             n_neardup = n_extracted - n_fresh
             self._append_state("content_seen", fresh_hashes)
 
-        cand_all = extract_candidates(extract_input, dedup=False)
+        # links_extracted (the oracle's links_ct: canonical links before
+        # the same-host filter) rides the candidate stream
+        obs_links = Observation() if cfg.detailed_metrics else None
+        cand_all = extract_candidates(extract_input, dedup=False, observation=obs_links)
         if cfg.model_xpaths is not None or cfg.model_action_seq is not None:
             # harvest mode: the learned model decides which links exist.
             # src_text is nullable — NULL rlike would make BOTH branches
             # NULL and silently drop a model-matched link the oracle
             # keeps (it matches on `text or ''`), so anchor on ''
             is_digit = F.coalesce(F.col("src_text"), F.lit("")).rlike("^[0-9]+$")
-            pg_joined = False
             if cfg.paging_model:
                 # per-source pagination (crawl.clj:358-390: the paging
                 # action AND its refinement are keyed by the parent's
                 # action seq). The parent's entry rides in as ONE small
-                # struct via a size-guarded join against the
-                # quota-bounded batch — the candidate stream never
-                # carries the path array itself, and the model lives
-                # entirely in this epoch-local literal CASE (tiny:
-                # one entry per learned source seq).
+                # struct via size-guarded joins — model into the
+                # quota-bounded batch by path, batch into the candidates
+                # by src_seq — so the candidate stream never carries the
+                # path array itself.
                 from .operators.xpath_model import href_path_tokens
 
-                pg_type = (
-                    "struct<xpath:string,only:array<string>,"
-                    "avoid:array<string>>"
-                )
-                pg_expr = F.lit(None).cast(pg_type)
-                for seq, xp, only, avoid in cfg.paging_model:
-                    cond = (
-                        F.col("path") == F.array(*[F.lit(s) for s in seq])
-                        if seq
-                        else (F.size("path") == 0)
-                    )
-                    pg_expr = F.when(
-                        cond,
-                        F.struct(
-                            F.lit(xp).alias("xpath"),
-                            F.array(*[F.lit(t) for t in only])
-                            .cast("array<string>")
-                            .alias("only"),
-                            F.array(*[F.lit(t) for t in avoid])
-                            .cast("array<string>")
-                            .alias("avoid"),
-                        ),
-                    ).otherwise(pg_expr)
-                sel_pg = selected.select(
-                    F.col("seq").alias("src_seq"), pg_expr.alias("__pg")
-                )
+                sel_pg = selected.join(
+                    self._bcast(self._paging, len(cfg.paging_model)), "path"
+                ).select(F.col("seq").alias("src_seq"), "__pg")
                 cand_all = cand_all.join(
                     self._bcast(sel_pg, n_pending_hint), "src_seq", "left"
                 )
-                pg_joined = True
                 toks = href_path_tokens("url")
                 pg = F.col("__pg")
                 keep_paging = (
@@ -1198,9 +1181,7 @@ class CrawlEngine:
                 )
             cand_all = cand_all.filter(keep_paging | keep_content).withColumn(
                 "queue", F.when(keep_paging, F.lit("paging")).otherwise(F.lit("content"))
-            )
-            if pg_joined:
-                cand_all = cand_all.drop("__pg")
+            ).drop("__pg")
         if cfg.refine_avoid or cfg.refine_only:
             # learned refinement (:only restriction first, then :avoid,
             # dom.clj:599-631) — dropped BEFORE the seen check and
@@ -1261,18 +1242,7 @@ class CrawlEngine:
         survivors_raw.persist()
         n_new = survivors_raw.count()  # the ONE action: fires every observation
         (n_fetched, n_leaves) = self._obs_get(
-            obs_fetch, ("n", "lv"),
-            lambda: tuple(
-                fetched.agg(
-                    F.count(F.lit(1)),
-                    F.coalesce(
-                        F.sum(
-                            (F.col("is_leaf") & ~F.col("__cache_hit")).cast("long")
-                        ),
-                        F.lit(0),
-                    ),
-                ).first()
-            ),
+            obs_fetch, ("n", "lv"), lambda: tuple(fetched.agg(*fetch_aggs).first())
         )
         (n_candidates,) = self._obs_get(
             obs_cand, ("n",), lambda: (cand_all.count(),)
@@ -1281,20 +1251,14 @@ class CrawlEngine:
             obs_sel, ("n",), lambda: (selected_raw.count(),)
         )
         (n_pending, n_disallowed) = self._obs_get(
-            obs_flag, ("n", "d"),
-            lambda: tuple(
-                flagged.agg(
-                    F.count(F.lit(1)),
-                    F.coalesce(
-                        F.sum(F.col("__disallowed").cast("long")), F.lit(0)
-                    ),
-                ).first()
-            ),
+            obs_flag, ("n", "d"), lambda: tuple(flagged.agg(*flag_aggs).first())
         )
-        n_links = (
-            count_extracted(extract_input).count()
+        (n_links,) = (
+            self._obs_get(
+                obs_links, ("n",), lambda: (canonical_links(extract_input).count(),)
+            )
             if cfg.detailed_metrics
-            else n_candidates
+            else (n_candidates,)
         )
         survivors = self._assign_seq(
             survivors_raw, ["src_seq", "pos"], "insertion_seq", next_seq, n_new
@@ -1414,7 +1378,7 @@ class CrawlEngine:
                 closure_new.select("partition_id", "url_hash", "url")
             )
         self._append_state("url_seen", new_seen)
-        if cfg.use_bloom:
+        if cfg.seen_filter != "none":
             self._state["segments"] = self._build_segments(
                 new_seen, self._state["segments"]
             )

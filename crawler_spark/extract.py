@@ -15,7 +15,7 @@ within-page order the reference's sequential walk produces.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from .canon import canonicalize_expr, host_of_expr
@@ -41,15 +41,11 @@ def extension_filter(
     return df.filter(matches if keep_matching else ~matches)
 
 
-def extract_candidates(fetched: DataFrame, dedup: bool = True) -> DataFrame:
-    """fetched: (seq, url, host, out_links, ...) → candidate links.
-
-    Returns (src_seq, pos, src_url, src_text, src_xpath, host, url)
-    after nofollow/javascript/canonicalize/same-host filters; with
-    ``dedup`` (default) also deduped within the batch keeping the first
-    occurrence in (src_seq, pos) order — exactly what sequential
-    processing would keep. ``dedup=False`` keeps every occurrence (the
-    oracle's dup-counting semantics need the multiplicity).
+def canonical_links(fetched: DataFrame) -> DataFrame:
+    """fetched: (seq, url, host, out_links, [depth]) → one row per
+    followable link: (src_seq, src_url, src_host, [src_depth], pos, link,
+    canon_url), nofollow and non-canonicalizable links dropped. Its row
+    count is the oracle's links_extracted (before the same-host filter).
     """
     # NOTE: depth rides the candidate stream (an int, and the harvest
     # mode's depth-indexed filter needs it pre-seen-check); the action
@@ -57,23 +53,46 @@ def extract_candidates(fetched: DataFrame, dedup: bool = True) -> DataFrame:
     # link row through the dedup shuffle and the Arrow seen probe is
     # measurable waste, so the engine re-attaches paths to survivors
     # with a broadcast join on src_seq against the quota-bounded batch.
-    pass_cols = [c for c in ("depth",) if c in fetched.columns]
-    passthrough = [F.col(c).alias(f"src_{c}") for c in pass_cols]
+    passthrough = [F.col("depth").alias("src_depth")] if "depth" in fetched.columns else []
     links = fetched.select(
         F.col("seq").alias("src_seq"),
         F.col("url").alias("src_url"),
         F.col("host").alias("src_host"),
         *passthrough,
         F.posexplode("out_links").alias("pos", "link"),
+    ).filter(~F.col("link.nofollow"))
+    cols = links.columns
+    # explode(array(c)) binds the canonical url once: the optimizer
+    # copies a projected expression into every filter it pushes below the
+    # projection (the null test, the same-host test), but pushes no
+    # filter below the generator that produces the column
+    return (
+        links.withColumn(
+            "__canon", canonicalize_expr(F.col("link.href"), F.col("src_url"))
+        )
+        .select(*cols, F.explode(F.array("__canon")).alias("canon_url"))
+        .filter(F.col("canon_url").isNotNull())
     )
-    links = links.filter(~F.col("link.nofollow"))
-    links = links.withColumn(
-        "canon_url", canonicalize_expr(F.col("link.href"), F.col("src_url"))
-    ).filter(F.col("canon_url").isNotNull())
-    # links_extracted metric is counted at this point (post-canonicalize,
-    # pre-same-host) to match the oracle's links_ct
-    links = links.withColumn("link_host", host_of_expr(F.col("canon_url")))
-    same_host = links.filter(F.col("link_host") == F.col("src_host"))
+
+
+def extract_candidates(
+    fetched: DataFrame, dedup: bool = True, observation: Observation | None = None
+) -> DataFrame:
+    """fetched: (seq, url, host, out_links, ...) → candidate links.
+
+    Returns (src_seq, pos, src_url, src_text, src_xpath, host, url)
+    after nofollow/javascript/canonicalize/same-host filters; with
+    ``dedup`` (default) also deduped within the batch keeping the first
+    occurrence in (src_seq, pos) order — exactly what sequential
+    processing would keep. ``dedup=False`` keeps every occurrence (the
+    oracle's dup-counting semantics need the multiplicity). An
+    *observation* collects ``n``, the :func:`canonical_links` row count,
+    during whatever action evaluates the result.
+    """
+    links = canonical_links(fetched)
+    if observation is not None:
+        links = links.observe(observation, F.count(F.lit(1)).alias("n"))
+    same_host = links.filter(host_of_expr(F.col("canon_url")) == F.col("src_host"))
 
     if dedup:
         w = Window.partitionBy("canon_url").orderBy("src_seq", "pos")
@@ -88,23 +107,12 @@ def extract_candidates(fetched: DataFrame, dedup: bool = True) -> DataFrame:
         "src_seq",
         "pos",
         "src_url",
-        *[f"src_{c}" for c in pass_cols],
+        *[c for c in ("src_depth",) if c in same_host.columns],
         F.col("link.text").alias("src_text"),
         F.col("link.xpath").alias("src_xpath"),
-        F.col("link_host").alias("host"),
+        F.col("src_host").alias("host"),
         F.col("canon_url").alias("url"),
         F.when(F.col("link.text").rlike("^[0-9]+$"), F.lit("paging"))
         .otherwise(F.lit("content"))
         .alias("queue"),
-    )
-
-
-def count_extracted(fetched: DataFrame) -> DataFrame:
-    """links_extracted per the oracle's definition: non-nofollow,
-    canonicalizable links (before the same-host filter)."""
-    links = fetched.select(
-        F.col("url").alias("src_url"), F.explode("out_links").alias("link")
-    ).filter(~F.col("link.nofollow"))
-    return links.filter(
-        canonicalize_expr(F.col("link.href"), F.col("src_url")).isNotNull()
     )

@@ -28,7 +28,7 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle_partitions = shuffle_partitions or cpus
+    submitted = "PYSPARK_GATEWAY_PORT" in os.environ
     b = SparkSession.builder.appName(app)
     # Under spark-submit the driver JVM already exists and carries the
     # operator's --master (yarn, k8s, local-cluster, ...); PythonRunner
@@ -36,27 +36,31 @@ def get_spark(
     # .master() here would silently stomp that choice and fall the whole
     # job back to local mode — so only set a master when the caller asked
     # for one explicitly, or when no submitted JVM exists (plain-python
-    # entry, where SparkSession needs SOME master to launch).
+    # entry, where SparkSession needs SOME master to launch). The
+    # partition count follows the same rule, and driver memory is the
+    # operator's alone under spark-submit.
     if master is not None:
         b = b.master(master)
-    elif "PYSPARK_GATEWAY_PORT" not in os.environ:
+    elif not submitted:
         b = b.master(f"local[{cpus}]")
+    if shuffle_partitions is not None or not submitted:
+        b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
     # Python workers import this package to run mapInPandas/applyInPandas
     # bodies; a session started outside the repository root would leave
     # them without it. The same rule as the master: a submitted JVM's
     # executors get their paths from spark-submit (--py-files).
-    if "PYSPARK_GATEWAY_PORT" not in os.environ:
-        b = b.config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
+    if not submitted:
+        b = b.config("spark.executorEnv.PYTHONPATH", _worker_pythonpath()).config(
+            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g")
+        )
     b = (
-        b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
+        b.config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")

@@ -45,6 +45,24 @@ def test_spark_matches_python(spark):
         assert got[href] == want, href
 
 
+def test_canonicalize_expr_plan_size(spark):
+    """Each intermediate is built once: the analyzed plan of one call
+    holds at most two copies of the resolved url (and so of the
+    unescape chain). The per-use inlining it replaces held 210 replace,
+    43 regexp_replace and 20 regexp_extract nodes."""
+    import re
+
+    df = spark.createDataFrame([("a", "b")], "href string, base string").select(
+        canonicalize_expr(F.col("href"), F.col("base")).alias("c")
+    )
+    plan = df._jdf.queryExecution().analyzed().toString()
+    count = {f: len(re.findall(rf"\b{f}\(", plan))
+             for f in ("replace", "regexp_replace", "regexp_extract")}
+    assert count["replace"] <= 12, count
+    assert count["regexp_replace"] <= 16, count
+    assert count["regexp_extract"] <= 2, count
+
+
 def test_host_of(spark):
     urls = ["http://host3.test/p/1/x", "https://a.b.test:8080/z"]
     df = spark.createDataFrame([(u,) for u in urls], ["u"]).select(

@@ -169,3 +169,12 @@ def test_resume_filter_kind_guard(spark, tmp_path):
     eng2 = CrawlEngine(spark, corpus, robots, EngineConfig(seen_filter="bloom", **base))
     with pytest.raises(ValueError, match="seen_filter"):
         eng2.resume()
+
+
+def test_seen_filter_rejects_unknown_kind():
+    """Only the three filter kinds exist; any other value used to build
+    bloom segments silently."""
+    from crawler_spark.engine import EngineConfig
+
+    with pytest.raises(ValueError, match="seen_filter"):
+        EngineConfig(seen_filter="Cuckoo")

@@ -20,7 +20,7 @@ def web(spark):
     return cfg, corpus, robots
 
 
-def _run_both(spark, cfg, corpus, robots, use_bloom, tmpdir, max_epochs=5, epoch_ms=8000):
+def _run_both(spark, cfg, corpus, robots, seen_filter, tmpdir, max_epochs=5, epoch_ms=8000):
     seeds = seed_urls(cfg, 5)
     oracle = crawl_oracle(cfg, seeds, robots_rows(cfg), max_epochs=max_epochs, epoch_ms=epoch_ms)
     eng = CrawlEngine(
@@ -30,7 +30,7 @@ def _run_both(spark, cfg, corpus, robots, use_bloom, tmpdir, max_epochs=5, epoch
         EngineConfig(
             max_epochs=max_epochs,
             epoch_ms=epoch_ms,
-            use_bloom=use_bloom,
+            seen_filter=seen_filter,
             checkpoint_dir=str(tmpdir),
             n_seen_buckets=8,
             bloom_m_bits=1 << 16,
@@ -42,7 +42,7 @@ def _run_both(spark, cfg, corpus, robots, use_bloom, tmpdir, max_epochs=5, epoch
 
 def test_crawl_order_and_seen_parity(spark, web, tmp_path):
     cfg, corpus, robots = web
-    oracle, eng = _run_both(spark, cfg, corpus, robots, True, tmp_path / "ck1")
+    oracle, eng = _run_both(spark, cfg, corpus, robots, "bloom", tmp_path / "ck1")
 
     got_order = [(r.seq, r.url, r.epoch) for r in eng.crawl_order.collect()]
     want_order = [(s, u, e) for (s, u, e, _h) in oracle.crawl_order]
@@ -64,7 +64,7 @@ def test_parity_without_bloom(spark, web, tmp_path):
     """Bloom is a prefilter only — disabling it must not change results."""
     cfg, corpus, robots = web
     oracle, eng = _run_both(
-        spark, cfg, corpus, robots, False, tmp_path / "ck2", max_epochs=3
+        spark, cfg, corpus, robots, "none", tmp_path / "ck2", max_epochs=3
     )
     got_order = [(r.seq, r.url) for r in eng.crawl_order.collect()]
     assert got_order == [(s, u) for (s, u, _e, _h) in oracle.crawl_order]
@@ -170,7 +170,7 @@ def test_dual_queue_paging(spark, web, tmp_path):
     order parity plus presence of paging rows in the frontier."""
     cfg, corpus, robots = web
     oracle, eng = _run_both(
-        spark, cfg, corpus, robots, True, tmp_path / "pg", max_epochs=6
+        spark, cfg, corpus, robots, "bloom", tmp_path / "pg", max_epochs=6
     )
     got = [(r.seq, r.url) for r in eng.crawl_order.collect()]
     assert got == [(s, u) for (s, u, _e, _h) in oracle.crawl_order]
@@ -216,7 +216,7 @@ def test_politeness_quota_respected(spark, web, tmp_path):
     """No host exceeds its per-epoch quota in the realized schedule."""
     cfg, corpus, robots = web
     _oracle, eng = _run_both(
-        spark, cfg, corpus, robots, True, tmp_path / "ck3", max_epochs=4
+        spark, cfg, corpus, robots, "bloom", tmp_path / "ck3", max_epochs=4
     )
     delays = {r["host"]: r["crawl_delay_ms"] for r in robots_rows(cfg)}
     from collections import Counter
@@ -239,7 +239,7 @@ def test_parity_with_redirect_aliases(spark, tmp_path):
     corpus.count()
     robots = spark.createDataFrame(robots_rows(cfg), ROBOTS_SCHEMA)
     oracle, eng = _run_both(
-        spark, cfg, corpus, robots, True, tmp_path / "ck_alias", max_epochs=5
+        spark, cfg, corpus, robots, "bloom", tmp_path / "ck_alias", max_epochs=5
     )
     got_order = [(r.seq, r.url, r.epoch) for r in eng.crawl_order.collect()]
     want_order = [(s, u, e) for (s, u, e, _h) in oracle.crawl_order]
@@ -270,7 +270,7 @@ def test_parity_with_deferred_commits(spark, web, tmp_path):
     oracle = crawl_oracle(cfg, seeds, robots_rows(cfg), max_epochs=4, epoch_ms=8000)
     eng = CrawlEngine(
         spark, corpus, robots,
-        EngineConfig(max_epochs=4, epoch_ms=8000, use_bloom=True,
+        EngineConfig(max_epochs=4, epoch_ms=8000,
                      checkpoint_dir=str(tmp_path / "ck_defer"),
                      n_seen_buckets=8, bloom_m_bits=1 << 16,
                      commit_every=3, track_content_dups=True),

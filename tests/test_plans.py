@@ -166,3 +166,41 @@ def test_fetch_join_prunes_image_payload(spark, tmp_path):
         assert kept in rs, rs
     for payload in ("bytes", "phash", "fmt", "caption", "image_id"):
         assert payload not in rs, rs
+
+
+def test_extract_candidates_keeps_whole_stage_codegen(spark):
+    """The out-links explode and its canonicalization compile as one
+    whole-stage codegen stage (no "Code grows beyond 64 KB" fallback),
+    and exactly one operator of the plan canonicalizes: filters on the
+    canonical url are not pushed below it as inlined copies."""
+    from crawler_spark.extract import extract_candidates
+    from crawler_spark.plans import explain_str
+    from crawler_spark.seen import bucket_expr
+
+    links = [
+        ("/x", "1", "//a", False),
+        ("y#f", "t", "//a", False),
+        ("http://o.test/z", "t", "//a", False),
+        ("javascript:x", None, None, False),
+    ]
+    fetched = spark.createDataFrame(
+        [(1, "http://h.test/a/b", "h.test", links, 0)],
+        "seq long, url string, host string, out_links array<struct<href:string,"
+        "text:string,xpath:string,nofollow:boolean>>, depth int",
+    ).persist()
+    out = (
+        extract_candidates(fetched, dedup=False)
+        .withColumn("url_hash", F.xxhash64("url"))
+        .withColumn("partition_id", bucket_expr(F.col("url_hash"), 8))
+    )
+    plan = explain_str(out, "simple")
+    assert sum("$1$2$3$4$5$6$7" in line for line in plan.splitlines()) == 1, plan
+    key = "spark.sql.codegen.fallback"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        got = sorted((r.pos, r.url) for r in out.collect())
+    finally:
+        spark.conf.set(key, before)
+        fetched.unpersist()
+    assert got == [(0, "http://h.test/x"), (1, "http://h.test/a/y")]

@@ -27,6 +27,8 @@ BASE = st.sampled_from(
         "http://hostA.test/p/3/page",
         "https://b.example.org:8080/x/y/z",
         "http://c.test/",
+        "noscheme/x",
+        "HTTP://Up.Test:443/A/b",
     ]
 )
 

@@ -78,7 +78,7 @@ def test_ttl_parity_no_prefilter(spark, web, tmp_path):
         spark, corpus, robots,
         EngineConfig(
             max_epochs=6, epoch_ms=8000, n_seen_buckets=8,
-            checkpoint_dir=str(tmp_path / "ck_nofilter"), use_bloom=False,
+            checkpoint_dir=str(tmp_path / "ck_nofilter"), seen_filter="none",
             recrawl_ttl_epochs=2,
         ),
     )

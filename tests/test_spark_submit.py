@@ -30,6 +30,25 @@ def test_local_session_gives_python_workers_the_package(spark):
     assert path is not None and path.split(os.pathsep)[0] == REPO
 
 
+def test_submitted_session_keeps_operator_partitions(spark, monkeypatch):
+    """Under spark-submit (PYSPARK_GATEWAY_PORT set) get_spark leaves the
+    operator's spark.sql.shuffle.partitions alone unless the caller
+    asks for a count. Conf-only: getOrCreate returns the shared session
+    and applies the builder's settings to it."""
+    from crawler_spark.session import get_spark
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "7")
+        monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "1")
+        assert get_spark() is spark
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+        get_spark(shuffle_partitions=5)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
 @pytest.mark.skipif(SPARK_SUBMIT is None, reason="spark-submit not on PATH")
 def test_spark_submit_pyfiles_crawl(tmp_path):
     sys.path.insert(0, REPO)
